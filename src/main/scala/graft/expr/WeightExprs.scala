@@ -257,11 +257,6 @@ object WeightExprs {
       .when(risk < hi, "orange").otherwise("red")
   }
 
-  /** Accident relevance for proximity listings: `100·exp(−d/10)`
-    * (ref: `backend/app/api/v1/mp_routes.py:870-873`).
-    */
-  def impactScore(distanceKm: Column): Column = lit(100.0) * exp(-distanceKm / 10.0)
-
   /** Exponential-decay half-life in years for a decay λ
     * (ref: `backend/app/services/temporal_weighting.py:185-217`).
     */

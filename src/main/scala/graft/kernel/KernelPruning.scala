@@ -305,7 +305,7 @@ object KernelPruning {
         nLons.map(n => pmod(col("__r_cell_lon") + col("__dlon"), lit(n)))))
       .drop("__r_cell_lat", "__r_cell_lon", "__dlat", "__dlon")
 
-    val accCelled = SafetyKernel.enrichAccidents(accidents, planDate)
+    val accCelled = SafetyKernel.enrichAccidents(accidents, Seq(planDate))
       .withColumn("__tier", explode(array(RadiusTierKm.indices.map(i => lit(i)): _*)))
       .withColumn("__cell_lat", latCellFor(col("a_lat"), col("__tier")))
       .withColumn("__cell_lon", lonCellFor(col("a_lon"), col("__tier")))
@@ -351,7 +351,7 @@ object KernelPruning {
           asin(sqrt(col("__hav")))))
       .where(col("dist_km") <= col("__gate_km"))
       .drop("__s2lon", "__hav", "__gate_km", "__hav_gate")
-    SafetyKernel.influenceColumns(gated)
+    SafetyKernel.influenceColumns(gated, col("dist_km"))
   }
 
   /** Pruned end-to-end scoring — drop-in for SafetyKernel.scoreRoutes with

@@ -68,15 +68,17 @@ object SafetyKernel {
     * analytics A13) all derive from this one plan.
     *
     * Everything that depends on only ONE side is computed BEFORE the join
-    * (type-bandwidth/λ/elevation-constant per route; severity weight,
-    * season flag, day count per accident) so the O(routes × accidents)
-    * inner loop is pure numeric trig/exp — no string ops, no when-chains
-    * over strings. Results are bit-identical to the reference composition
-    * (the hoisted values are the same values, evaluated once).
+    * (type-bandwidth/elevation-constant/temporal slot per route; severity
+    * weight, per-type temporal weight per accident) so the
+    * O(routes × accidents) inner loop is pure numeric trig/exp — no string
+    * ops, no when-chains over strings. Results are bit-identical to the
+    * reference composition (the hoisted values are the same values,
+    * evaluated once).
     */
   def pairInfluence(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame =
     influenceColumns(
-      enrichRoutes(balance(routes)).crossJoin(broadcast(enrichAccidents(accidents, planDate))))
+      enrichRoutes(balance(routes)).crossJoin(broadcast(enrichAccidents(accidents, Seq(planDate)))),
+      hoistedDistance)
 
   /** The broadcast-NLJ kernel parallelizes over ROUTE partitions only — a
     * small single-file parquet scan (one split) would run the whole
@@ -84,95 +86,91 @@ object SafetyKernel {
     */
   private def balance(routes: DataFrame): DataFrame = graft.Partitioning.balanced(routes)
 
+  /** Temporal slots per plan date: one per canonical type, the default last. */
+  private val TemporalSlots = CanonicalTypes.size + 1
+
   /** Route-side enrichment: every type-dependent constant hoisted out of
     * the pair loop.
     */
-  def enrichRoutes(routes: DataFrame): DataFrame = {
-    val routesEnriched = routes
+  private[kernel] def enrichRoutes(routes: DataFrame): DataFrame =
+    routes
       .withColumn("__rt_lc", lower(col("route_type")))
       .withColumn("__h", WeightExprs.spatialBandwidthKm(col("__rt_lc")))
-      .withColumn("__lam", WeightExprs.temporalLambda(col("__rt_lc")))
       .withColumn("__elev_c",
         WeightExprs.ElevationDecayConstant.foldLeft(when(lit(false), lit(0.0))) {
           case (acc, (k, v)) => acc.when(col("__rt_lc") === k, v)
         }.otherwise(WeightExprs.ElevationDecayDefault))
       .withColumn("__rt_idx", typeIdx(col("__rt_lc")))
+      // 1-based position of the route's type in one date's temporal slots
+      // (the default slot last) — see enrichAccidents
+      .withColumn("__tw_slot",
+        when(col("__rt_idx") >= 0, col("__rt_idx") + 1).otherwise(TemporalSlots))
       // pair-loop hoists: cos(lat) for the haversine, 2h² for the spatial
       // Gaussian — both depend on the route row only
       .withColumn("__coslat", cos(radians(col("lat"))))
       .withColumn("__two_h2", lit(2.0) * pow(col("__h"), 2))
-    routesEnriched
-  }
 
-  /** Accident-side enrichment: severity weight, type index, day count,
-    * season flag, weather factor — all per accident, never per pair.
+  /** Accident-side enrichment for the plan dates: severity weight, type
+    * index, weather factor, cos(lat) — all per accident, never per pair —
+    * and the temporal weight of every (date, route-type slot) as one flat
+    * array `__tw`, date i's slots at i·8 + `__tw_slot`. λ can only be one
+    * of the canonical types' values or the default, so the two per-pair
+    * pow() calls and the season test of the temporal weight collapse to
+    * this per-ACCIDENT precompute; the pair loop just indexes it. Same
+    * constants, same op order → the picked value is bit-identical to the
+    * inline formula.
     */
-  def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame = {
+  private[kernel] def enrichAccidents(accidents: DataFrame, dates: Seq[Column]): DataFrame = {
+    require(dates.nonEmpty, "enrichAccidents: empty dates list")
     val accBase =
       if (accidents.columns.contains("wsim")) accidents
       else accidents.withColumn("wsim", lit(NeutralWeatherSimilarity))
-    val accEnriched = accBase
+    // each date's day count and season multiplier, once per accident (as
+    // columns, so the eight slots of a date reference them instead of
+    // inlining eight copies)
+    val perDate = dates.zipWithIndex.flatMap { case (d, i) => Seq(
+      s"__days_$i" -> abs(datediff(d, col("a_date"))).cast("double"),
+      s"__season_$i" -> when(WeightExprs.seasonOf(d) === WeightExprs.seasonOf(col("a_date")),
+        seasonalMultiplier).otherwise(lit(1.0)))
+    }
+    accBase
       .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
       .withColumn("__acc_idx", typeIdx(lower(col("acc_type"))))
-      .withColumn("__days", abs(datediff(planDate, col("a_date"))).cast("double"))
-      .withColumn("__same_season",
-        WeightExprs.seasonOf(planDate) === WeightExprs.seasonOf(col("a_date")))
       .withColumn("__wfactor", WeightExprs.weatherFactor(col("wsim")))
-      // λ can only be one of the canonical types' values or the default,
-      // so the two per-pair pow() calls of the temporal weight collapse to
-      // a per-ACCIDENT slot-per-type precompute; the pair loop just
-      // indexes it with the route's type index. Same constants, same op
-      // order → the picked value is bit-identical to the inline formula.
-      // NB: callers that re-derive `__days` per row AFTER enrichment (the
-      // date-expanded forecast/warming paths) must re-derive this array
-      // from the new column too — `temporalSlots` is the shared builder.
-      .withColumn("__tw_arr", temporalSlots(col("__days")))
       .withColumn("__a_coslat", cos(radians(col("a_lat"))))
-    accEnriched
+      .withColumns(perDate.toMap)
+      .withColumn("__tw", array(dates.indices.flatMap(temporalSlots): _*))
+      .drop(perDate.map(_._1): _*)
   }
-
-  /** One temporal base weight per canonical type (+ the default slot last),
-    * as a function of a day-count column — the precompute indexed by
-    * `__rt_idx` in [[influenceColumns]].
-    */
-  def temporalSlots(days: Column): Column = {
-    def tw(lam: Double): Column =
-      lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
-        (lit(1.0) - pow(pow(lit(lam), days), WeightExprs.TemporalDecayShape))
-    array((CanonicalTypes.map(WeightExprs.TemporalLambda) :+
-      WeightExprs.TemporalLambdaDefault).map(tw): _*)
-  }
-
-  // --- the date-INDEPENDENT factor expressions, shared verbatim by the
-  // single-date kernel (influenceColumns) and the multi-date kernel
-  // (scoreRoutesForDates, which evaluates them once per pair below the
-  // date fan-out) — one definition, so the two paths cannot drift ------
-
-  private def spatialExpr(twoH2: Column): Column =
-    exp(-(pow(col("dist_km"), 2)) / twoH2)
-
-  private def elevationExpr: Column = {
-    val elevDiff = abs(col("a_elev") - col("elev"))
-    when(col("elev").isNull || col("a_elev").isNull, lit(1.0))
-      .otherwise(lit(1.0) + lit(WeightExprs.ElevationBonusMax) *
-        exp(-pow(elevDiff / col("__elev_c"), 2)))
-  }
-
-  private def routeTypeExpr: Column =
-    when(col("__rt_idx") >= 0 && col("__acc_idx") >= 0,
-      element_at(array(rtMatrixFlat.map(lit): _*),
-        (col("__rt_idx") * 7 + col("__acc_idx") + 1).cast("int")))
-      .otherwise(WeightExprs.DefaultRouteTypeWeight)
-
-  private def gradeExpr: Column =
-    WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty"))
 
   private val seasonalMultiplier = lit(1.0 +
     (WeightExprs.SeasonalBoost - 1.0) * WeightExprs.TemporalSeasonalImpact)
 
-  /** The per-pair kernel over an already-joined (enriched-routes ×
-    * enriched-accidents) frame — shared by the exact cross-join path and
-    * the grid-pruned equi-join path (KernelPruning).
+  /** Date i's temporal weight per canonical type (+ the default slot
+    * last) for the accident row: 1 − 0.35·(1 − (λ^days)^1.5), ×1.05 in
+    * the accident's season (×1.0 otherwise — exact, so equal to the
+    * unmultiplied weight).
+    */
+  private def temporalSlots(i: Int): Seq[Column] =
+    (CanonicalTypes.map(WeightExprs.TemporalLambda) :+ WeightExprs.TemporalLambdaDefault)
+      .map { lam =>
+        (lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
+          (lit(1.0) - pow(pow(lit(lam), col(s"__days_$i")), WeightExprs.TemporalDecayShape))) *
+          col(s"__season_$i")
+      }
+
+  /** The exact shapes' distance: haversine over the hoisted cos(lat)s. */
+  private def hoistedDistance: Column =
+    GeoExprs.haversineKmHoisted(col("__coslat"), col("lat"), col("lon"),
+      col("__a_coslat"), col("a_lat"), col("a_lon"))
+
+  /** THE influence definition, shared by every kernel shape: over an
+    * enriched (routes × accidents) pair frame, adds `dist_km` (the shape's
+    * own distance column `dist`) and the date-independent factors —
+    * spatial, elevation, route-type, severity, grade, weather. `pin` wraps
+    * each computed factor: identity at pair grain, EvalOnce under the
+    * multi-date fan-out. Date i's influence is then [[influence]] of
+    * [[temporal]](i) over these columns.
     *
     * If the ROUTE side carries a `wmult` column (the A7 extreme-weather
     * multiplier from the route-location bucket's historical stats,
@@ -183,69 +181,68 @@ object SafetyKernel {
     * `weather_similarity.py:473`) instead of the accident-hoisted factor —
     * exclusion threshold and quadratic power apply to the amplified value.
     */
-  def influenceColumns(pairs: DataFrame): DataFrame = {
-    val amplified = pairs.columns.contains("wmult")
-    // a factor column the caller ALREADY computed is kept, not re-derived
-    // — the multi-date kernel (scoreRoutesForDates) evaluates the
-    // date-independent factors once per pair BELOW the date fan-out, and
-    // re-deriving them here would undo exactly that sharing. Same value
-    // either way: the precomputed columns are built from the builders
-    // below, so this is reuse, not a second definition.
-    def keepOr(name: String, expr: => Column): Column =
-      if (pairs.columns.contains(name)) col(name) else expr
-    // spatial: exp(-d²/(2h²)) with per-route bandwidth (2h² hoisted)
-    val twoH2 =
-      if (pairs.columns.contains("__two_h2")) col("__two_h2")
-      else lit(2.0) * pow(col("__h"), 2)
-    val spatial = spatialExpr(twoH2)
-    // temporal: 1 − 0.35·(1 − (λ^days)^1.5), ×1.05 same season — from the
-    // per-accident per-type-slot precompute when the enrichment provided it
-    val baseWeight =
-      if (pairs.columns.contains("__tw_arr"))
-        element_at(col("__tw_arr"),
-          when(col("__rt_idx") >= 0, col("__rt_idx") + 1)
-            .otherwise(CanonicalTypes.size + 1).cast("int")) // default = last slot
-      else
-        lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
-          (lit(1.0) - pow(pow(col("__lam"), col("__days")), WeightExprs.TemporalDecayShape))
-    val temporal = when(col("__same_season"), baseWeight * seasonalMultiplier)
-      .otherwise(baseWeight)
-    // elevation: bonus-only gaussian with per-route constant
-    val elevW = elevationExpr
-    // route-type: int-indexed flat 7×7 matrix (same literals as the map form)
-    val rtW = routeTypeExpr
-    val grW = gradeExpr
-
-    // reuse a dist_km the caller already computed (e.g. the pruned path's
-    // per-type radius gate) — identical expression, evaluated once
-    val withDist =
-      if (pairs.columns.contains("dist_km")) pairs
-      else if (pairs.columns.contains("__coslat") && pairs.columns.contains("__a_coslat"))
-        pairs.withColumn("dist_km", GeoExprs.haversineKmHoisted(
-          col("__coslat"), col("lat"), col("lon"),
-          col("__a_coslat"), col("a_lat"), col("a_lon")))
-      else pairs.withColumn("dist_km",
-        GeoExprs.haversineKm(col("lat"), col("lon"), col("a_lat"), col("a_lon")))
-    withDist
-      .withColumn("spatial_w", keepOr("spatial_w", spatial))
-      .withColumn("temporal_w", temporal)
-      .withColumn("elevation_w", keepOr("elevation_w", elevW))
-      .withColumn("route_type_w", keepOr("route_type_w", rtW))
+  private def withFactors(pairs: DataFrame, dist: Column, pin: Column => Column): DataFrame = {
+    val elevDiff = abs(col("a_elev") - col("elev"))
+    pairs
+      .withColumn("dist_km", pin(dist))
+      // spatial: exp(-d²/(2h²)) with per-route bandwidth (2h² hoisted)
+      .withColumn("spatial_w", pin(exp(-(pow(col("dist_km"), 2)) / col("__two_h2"))))
+      // elevation: bonus-only gaussian with per-route constant
+      .withColumn("elevation_w", pin(
+        when(col("elev").isNull || col("a_elev").isNull, lit(1.0))
+          .otherwise(lit(1.0) + lit(WeightExprs.ElevationBonusMax) *
+            exp(-pow(elevDiff / col("__elev_c"), 2)))))
+      // route-type: int-indexed flat 7×7 matrix (same literals as the map form)
+      .withColumn("route_type_w", pin(
+        when(col("__rt_idx") >= 0 && col("__acc_idx") >= 0,
+          element_at(array(rtMatrixFlat.map(lit): _*),
+            (col("__rt_idx") * 7 + col("__acc_idx") + 1).cast("int")))
+          .otherwise(WeightExprs.DefaultRouteTypeWeight)))
       .withColumn("severity_w", col("__sev_w"))
-      .withColumn("grade_w", keepOr("grade_w", grW))
-      // multiplication order mirrors the reference composition exactly
-      // (safety_algorithm.py:293-319) — and the DuckDB oracle SQL.
-      .withColumn("base_influence",
-        col("spatial_w") * col("temporal_w") * col("elevation_w") *
-          col("route_type_w") * col("severity_w") * col("grade_w"))
+      .withColumn("grade_w", pin(WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty"))))
       .withColumn("weather_factor",
-        if (amplified) WeightExprs.weatherFactor(col("wsim") * col("wmult"))
+        if (pairs.columns.contains("wmult"))
+          pin(WeightExprs.weatherFactor(col("wsim") * col("wmult")))
         else col("__wfactor"))
-      .withColumn("influence", col("base_influence") * col("weather_factor"))
-      .drop("__rt_lc", "__h", "__lam", "__elev_c", "__rt_idx",
-        "__sev_w", "__acc_idx", "__days", "__same_season", "__wfactor",
-        "__coslat", "__a_coslat", "__tw_arr", "__two_h2")
   }
+
+  /** Date i's temporal weight: the accident's precomputed slot for the
+    * route's type (see [[enrichAccidents]]).
+    */
+  private def temporal(i: Int): Column =
+    element_at(col("__tw"), col("__tw_slot") + i * TemporalSlots)
+
+  /** spatial·temporal·elevation·route_type·severity·grade — the
+    * multiplication order of the reference (safety_algorithm.py:293-319)
+    * and of the DuckDB oracle SQL.
+    */
+  private def baseInfluence(temporal: Column): Column =
+    col("spatial_w") * temporal * col("elevation_w") *
+      col("route_type_w") * col("severity_w") * col("grade_w")
+
+  private def influence(temporal: Column): Column =
+    baseInfluence(temporal) * col("weather_factor")
+
+  /** The enrichment columns the pair grain drops. */
+  private val Hoisted = Seq("__rt_lc", "__h", "__elev_c", "__rt_idx", "__tw_slot",
+    "__coslat", "__two_h2", "__sev_w", "__acc_idx", "__wfactor", "__a_coslat", "__tw")
+
+  private val PairFactors = Seq("dist_km", "spatial_w", "temporal_w", "elevation_w",
+    "route_type_w", "severity_w", "grade_w", "base_influence", "weather_factor", "influence")
+
+  /** The pair-grain shape over an already-joined (enriched-routes ×
+    * enriched-accidents, one plan date) frame — shared by the exact
+    * cross-join path and the grid-pruned equi-join path (KernelPruning),
+    * each passing its own distance column. Output: the input's own
+    * columns, then every factor, `base_influence` and `influence`.
+    */
+  private[kernel] def influenceColumns(pairs: DataFrame, dist: Column): DataFrame =
+    withFactors(pairs, dist, identity)
+      .withColumn("temporal_w", temporal(0))
+      .withColumn("base_influence", baseInfluence(col("temporal_w")))
+      .withColumn("influence", influence(col("temporal_w")))
+      .select((pairs.columns.filterNot(c => c == "dist_km" || Hoisted.contains(c)) ++
+        PairFactors).map(col): _*)
 
   /** Aggregate pair influences to per-route risk (A1 + F16).
     *
@@ -270,106 +267,46 @@ object SafetyKernel {
   def scoreRoutes(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame =
     scoreRoutes(pairInfluence(routes, accidents, planDate))
 
-  /** Multi-date accident enrichment for [[scoreRoutesForDates]]: the
-    * date-independent scalars exactly as [[enrichAccidents]] hoists them,
-    * plus the two date-DEPENDENT temporal inputs as per-date arrays —
-    * `__tw_by_date(i)` / `__ss_by_date(i)` are the `__tw_arr` /
-    * `__same_season` values [[enrichAccidents]] would compute for
-    * `to_date(lit(dates(i)))`, built from the same expressions.
-    */
-  def enrichAccidentsForDates(accidents: DataFrame, dates: Seq[String]): DataFrame = {
-    require(dates.nonEmpty, "enrichAccidentsForDates: empty dates list")
-    val accBase =
-      if (accidents.columns.contains("wsim")) accidents
-      else accidents.withColumn("wsim", lit(NeutralWeatherSimilarity))
-    def dayCount(d: String): Column =
-      abs(datediff(to_date(lit(d)), col("a_date"))).cast("double")
-    accBase
-      .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
-      .withColumn("__acc_idx", typeIdx(lower(col("acc_type"))))
-      .withColumn("__wfactor", WeightExprs.weatherFactor(col("wsim")))
-      .withColumn("__a_coslat", cos(radians(col("a_lat"))))
-      .withColumn("__tw_by_date",
-        array(dates.map(d => temporalSlots(dayCount(d))): _*))
-      .withColumn("__ss_by_date", array(dates.map(d =>
-        WeightExprs.seasonOf(to_date(lit(d))) ===
-          WeightExprs.seasonOf(col("a_date"))): _*))
-  }
-
   /** Multi-date scoring with SHARED pair geometry — the nightly batch
-    * (ScoringPipeline.computeDailyScores) scores the same routes ×
-    * accidents for several plan dates, and only the TEMPORAL factor
-    * depends on the date. The per-date form re-ran the whole kernel per
-    * date: N × (haversine + spatial/elevation/grade exponentials) for
-    * pairs whose geometry never changes. Here ONE broadcast cross join
-    * evaluates every date-independent factor once per (route, accident)
-    * pair (EvalOnce-pinned so the per-date products reference them as
-    * attributes instead of inlining N copies), each date's influence is
-    * one product COLUMN over those attributes, the aggregate stays keyed
-    * by route alone (N sums per route, not N× the pair rows — the
-    * round-17 explode re-keyed the same pair stream through an N×-bigger
-    * aggregation input), and the per-date fan-out runs AFTER the
-    * aggregate, over |routes| rows.
+    * (ScoringPipeline.computeDailyScores), the 7-day forecast and cache
+    * warming (Predict) score the same routes × accidents for several plan
+    * dates, and only the TEMPORAL factor depends on the date. ONE
+    * broadcast cross join evaluates every date-independent factor once
+    * per (route, accident) pair (EvalOnce-pinned so the per-date products
+    * reference them as attributes instead of inlining N copies — without
+    * the pin CollapseProject would inline each factor's definition into
+    * every date's product, the guide-§4.4 duplication, one asin-haversine
+    * per date again; the pin is value-transparent, EvalOnce's generated
+    * code IS the child's). Each date's influence is one product COLUMN
+    * over those attributes, the aggregate stays keyed by route alone (N
+    * sums per route, not N× the pair rows — the round-17 explode re-keyed
+    * the same pair stream through an N×-bigger aggregation input), and the
+    * per-date fan-out runs AFTER the aggregate, over |routes| rows.
     *
     * Per-(route, date) results are bit-identical to
-    * `scoreRoutes(routes, accidents, to_date(lit(d)))`: the factor
-    * expressions are the same definitions (see the builders above),
-    * `base_influence` multiplies in the same order (temporal is a fresh
-    * per-date value; the date-independent factors are the same doubles),
-    * and each (route, date) group accumulates its accidents in the same
+    * `scoreRoutes(routes, accidents, dates(i))`: the factors and the
+    * product are the same definitions ([[withFactors]], [[influence]]),
+    * including the amplified weather factor when routes carry `wmult`, and
+    * each (route, date) group accumulates its accidents in the same
     * broadcast-iteration order, from exactly one map partition — pinned
     * by ScoringPipelineSpec's multi-date ≡ per-date arm.
     *
     * Returns the scoreRoutes columns + `prediction_date`.
     */
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
-                          dates: Seq[String]): DataFrame = {
+                          dates: Seq[Column]): DataFrame = {
     require(dates.nonEmpty, "scoreRoutesForDates: empty dates list")
     import graft.expr.EvalOnceExpr.evalOnce
-    // the shared (date-independent) factors, computed once per pair and
-    // EvalOnce-pinned: the per-date influence columns below reference
-    // these as attributes, and without the pin CollapseProject would
-    // inline each factor's definition into every date's product — the
-    // guide-§4.4 duplication, one asin-haversine per date again. The pin
-    // is value-transparent (EvalOnce's generated code IS the child's).
-    val pairs = enrichRoutes(balance(routes))
-      .crossJoin(broadcast(enrichAccidentsForDates(accidents, dates)))
-      .withColumn("dist_km", evalOnce(GeoExprs.haversineKmHoisted(
-        col("__coslat"), col("lat"), col("lon"),
-        col("__a_coslat"), col("a_lat"), col("a_lon"))))
-      .withColumn("spatial_w", evalOnce(spatialExpr(col("__two_h2"))))
-      .withColumn("elevation_w", evalOnce(elevationExpr))
-      .withColumn("route_type_w", evalOnce(routeTypeExpr))
-      .withColumn("grade_w", evalOnce(gradeExpr))
-    // per-date influence as COLUMNS over the shared factors (round 18):
-    // the round-17 form exploded the date index per pair, tripling the
-    // aggregation input (3.48B rows at the 168K nightly) to re-key the
-    // SAME pair stream; here each date's influence is one more product
-    // column, the aggregate stays keyed by route alone over 1.16B rows,
-    // and the 3× fan-out happens AFTER the aggregate over 168K rows.
-    // Values are bit-identical to the exploded form: same temporal pick
-    // (the per-accident per-type slot arrays), same multiplication
-    // order (spatial·temporal·elevation·route_type·severity·grade, then
-    // ×weather), and each (route, date) sum accumulates its accidents
-    // in the same broadcast-iteration order from exactly one map
-    // partition — pinned by ScoringPipelineSpec's bitwise arm.
-    def influenceFor(i: Int): Column = {
-      val baseWeight = element_at(element_at(col("__tw_by_date"), i + 1),
-        when(col("__rt_idx") >= 0, col("__rt_idx") + 1)
-          .otherwise(CanonicalTypes.size + 1).cast("int"))
-      val temporal = when(element_at(col("__ss_by_date"), i + 1),
-        baseWeight * seasonalMultiplier).otherwise(baseWeight)
-      col("spatial_w") * temporal * col("elevation_w") *
-        col("route_type_w") * col("__sev_w") * col("grade_w") * col("__wfactor")
-    }
+    val pairs = withFactors(
+      enrichRoutes(balance(routes)).crossJoin(broadcast(enrichAccidents(accidents, dates))),
+      hoistedDistance, evalOnce)
     val narrow = pairs.select(
-      col("route_id") +: dates.indices.map(i => influenceFor(i).as(s"__infl_$i")): _*)
+      col("route_id") +: dates.indices.map(i => influence(temporal(i)).as(s"__infl_$i")): _*)
     val aggCols = dates.indices.flatMap { i =>
       Seq(sum(col(s"__infl_$i")).as(s"__tot_$i"),
         sum(when(col(s"__infl_$i") > SignificanceFloor, 1L).otherwise(0L))
           .as(s"__n_$i"))
     }
-    val dateLit = array(dates.map(d => to_date(lit(d))): _*)
     narrow
       .groupBy("route_id")
       .agg(aggCols.head, aggCols.tail: _*)
@@ -380,7 +317,7 @@ object SafetyKernel {
         col("pos").as("__di"))
       .withColumn("risk_score", WeightExprs.normalizeRiskScore(col("total_influence")))
       .withColumn("color_code", WeightExprs.colorCode(col("risk_score")))
-      .withColumn("prediction_date", element_at(dateLit, col("__di") + 1))
+      .withColumn("prediction_date", element_at(array(dates: _*), col("__di") + 1))
       .drop("__di")
   }
 

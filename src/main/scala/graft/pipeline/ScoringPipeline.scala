@@ -36,7 +36,7 @@ object ScoringPipeline {
   def computeDailyScores(routes: DataFrame, accidents: DataFrame,
                          dates: Seq[String]): DataFrame = {
     require(dates.nonEmpty, "computeDailyScores: empty dates list")
-    SafetyKernel.scoreRoutesForDates(routes, accidents, dates)
+    SafetyKernel.scoreRoutesForDates(routes, accidents, dates.map(d => to_date(lit(d))))
       .withColumn("calculated_at", current_timestamp())
   }
 

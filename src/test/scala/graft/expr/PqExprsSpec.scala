@@ -165,33 +165,55 @@ class PqExprsSpec extends SparkSpec {
     assertParity(nat(frame))
   }
 
+  /** `build` must fail with an IllegalStateException whose message is
+    * `want` — under whole-stage codegen, plain projection codegen and the
+    * interpreted path alike.
+    */
+  private def assertFailsEveryEngine(want: String)(build: => DataFrame): Unit = {
+    val conf = spark.conf
+    val prevMode = conf.getOption("spark.sql.codegen.factoryMode")
+    val prevWs = conf.getOption("spark.sql.codegen.wholeStage")
+    Seq("CODEGEN_ONLY" -> "true", "CODEGEN_ONLY" -> "false", "NO_CODEGEN" -> "false").foreach {
+      case (mode, wholeStage) =>
+        try {
+          conf.set("spark.sql.codegen.factoryMode", mode)
+          conf.set("spark.sql.codegen.wholeStage", wholeStage)
+          val e = intercept[Exception](build.collect())
+          def chain(t: Throwable): Seq[Throwable] =
+            Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
+          assert(chain(e).exists(c => c.isInstanceOf[IllegalStateException] &&
+            c.getMessage == want),
+            s"factoryMode=$mode wholeStage=$wholeStage threw ${e.getClass}: ${e.getMessage}")
+        } finally {
+          prevMode.fold(conf.unset("spark.sql.codegen.factoryMode"))(
+            conf.set("spark.sql.codegen.factoryMode", _))
+          prevWs.fold(conf.unset("spark.sql.codegen.wholeStage"))(
+            conf.set("spark.sql.codegen.wholeStage", _))
+        }
+    }
+  }
+
+  /** One row's ADC score over an 8-entry LUT (numSub 2, ksub 4). */
+  private def adcOf(codes: String): DataFrame =
+    spark.sql(
+      s"""SELECT id, codes, lut FROM VALUES
+         |  (0, $codes, array(0.1D, 0.2D, 0.3D, 0.4D, 0.5D, 0.6D, 0.7D, 0.8D))
+         |  AS t(id, codes, lut)""".stripMargin)
+      .repartition(2) // defeat ConvertToLocalRelation so codegen runs
+      .select(PqExprs.adcScore(col("codes"), col("lut"), lit(0.0), 2, 4).as("s"))
+
   test("pq_adc_score: short codes array fails loudly, both engines") {
     // a truncated codes column is an input pq_encode cannot produce —
     // it must fail the job (like the staged ANSI element_at did), never
-    // silently null the score (round-18 advisor fix)
-    def frame: DataFrame = spark.sql(
-      """SELECT id, codes, lut FROM VALUES
-        |  (0, array(1), array(0.1D, 0.2D, 0.3D, 0.4D, 0.5D, 0.6D, 0.7D, 0.8D))
-        |  AS t(id, codes, lut)""".stripMargin)
-      .repartition(2) // defeat ConvertToLocalRelation so codegen runs
-    val conf = spark.conf
-    val prevWs = conf.getOption("spark.sql.codegen.wholeStage")
-    Seq("true", "false").foreach { codegen =>
-      try {
-        conf.set("spark.sql.codegen.wholeStage", codegen)
-        val e = intercept[Exception] {
-          frame.select(
-            PqExprs.adcScore(col("codes"), col("lut"), lit(0.0), 2, 4).as("s"))
-            .collect()
-        }
-        def chain(t: Throwable): Seq[Throwable] =
-          Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
-        assert(chain(e).exists(c => c.isInstanceOf[IllegalStateException] &&
-          c.getMessage.contains("expected 2")),
-          s"codegen=$codegen threw ${e.getClass}: ${e.getMessage}")
-      } finally prevWs.fold(conf.unset("spark.sql.codegen.wholeStage"))(
-        conf.set("spark.sql.codegen.wholeStage", _))
-    }
+    // silently null the score
+    assertFailsEveryEngine("pq_adc_score: codes array has 1 elements, expected 2")(
+      adcOf("array(1)"))
+  }
+
+  test("pq_adc_score: out-of-LUT code fails with the same message, both engines") {
+    // code 9 of subspace 1 indexes 1·4 + 9 = 13 in the 8-entry LUT
+    assertFailsEveryEngine("pq_adc_score: code 9 of subspace 1 indexes outside the LUT")(
+      adcOf("array(1, 9)"))
   }
 
   test("evalonce: identity values, both engines, and pins a single evaluation") {

@@ -55,13 +55,23 @@ class ScoringPipelineSpec extends SparkSpec {
           col("n_contributing"), col("risk_score"), col("color_code"))
         .orderBy("prediction_date", "route_id")
         .collect().map(_.toString).toSeq
-    val fused = rows(graft.kernel.SafetyKernel.scoreRoutesForDates(rts, accs, dates))
-    val perDate = rows(dates.map { d =>
-      graft.kernel.SafetyKernel.scoreRoutes(rts, accs, to_date(lit(d)))
-        .withColumn("prediction_date", to_date(lit(d)))
-    }.reduce(_ unionByName _))
-    assert(fused.size == 200 * 3)
-    assert(fused == perDate) // exact string equality = bit-equal doubles
+    // routes carrying the A7 amplified-weather multiplier take the
+    // per-pair weather factor (wsim·wmult)³ on every kernel shape; the
+    // multi-date kernel must honour it exactly like the per-date one
+    val amplified = rts.withColumn("wmult", lit(1.0) + (col("route_id") % 3) * 0.25)
+    val accsW = accs.withColumn("wsim", lit(0.2) + (col("accident_id") % 10) / 15.0)
+    Seq("neutral" -> (rts, accs), "wmult" -> (amplified, accsW)).foreach {
+      case (arm, (r, a)) =>
+        val fused = rows(graft.kernel.SafetyKernel.scoreRoutesForDates(r, a,
+          dates.map(d => to_date(lit(d)))))
+        val perDate = rows(dates.map { d =>
+          graft.kernel.SafetyKernel.scoreRoutes(r, a, to_date(lit(d)))
+            .withColumn("prediction_date", to_date(lit(d)))
+        }.reduce(_ unionByName _))
+        assert(fused.size == 200 * 3, arm)
+        // exact string equality = bit-equal doubles
+        assert(fused == perDate, s"$arm: multi-date diverges from per-date")
+    }
   }
 
   test("runDaily writes date partitions, invariant holds, rerun is idempotent") {
